@@ -33,6 +33,15 @@ version; ``_latest`` is swapped last via ``os.replace`` (atomic on POSIX).
 Readers resolve ``_latest`` once and read a consistent snapshot of
 per-bucket paths — concurrent mutations never touch published generations.
 
+Cost of a mutation: the batch's ids and rows are driver-local frames
+(``table.local_frame``), so the stats, the probe and the write each read
+them from driver memory; the touched buckets are scanned once and
+rewritten in one partitioned write job; and float-array columns are
+written without a parquet dictionary (``table.parquet_writer``) — the
+dictionary would be discarded, so the files are byte-identical without
+the pass.  ``compact`` rewrites every fragmented bucket in that same one
+job.
+
 Scale: a delete of D ids costs O(sum of affected bucket sizes), not a
 table rewrite; with N buckets and uniform ids that is ~(D/N)·table per
 batch (pick n_buckets so a bucket fits an executor comfortably; at 100 TB
@@ -46,11 +55,12 @@ import json
 import os
 import shutil
 import uuid
-from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from minivectordb_spark.table import delete_ids, id_schema, local_frame, parquet_writer
 
 _MANIFEST_DIR = "_manifest"
 _LATEST = "_latest"
@@ -171,7 +181,7 @@ class DurableVectorTable:
         # one write job, partitioned by bucket: each bucket dir becomes gen 0
         tmp_token = uuid.uuid4().hex[:8]
         staging = os.path.join(path, f"_staging_{tmp_token}")
-        with_b.repartition("__b").write.partitionBy("__b").parquet(staging)
+        parquet_writer(with_b.repartition("__b")).partitionBy("__b").parquet(staging)
         for k in range(n_buckets):
             n = int(counts.get(k, 0))
             src = os.path.join(staging, f"__b={k}")
@@ -180,7 +190,7 @@ class DurableVectorTable:
                 os.makedirs(os.path.dirname(dst), exist_ok=True)
                 os.rename(src, dst)
             buckets[str(k)] = {"gen": 0, "rows": n}
-        _cleanup_staging(staging)
+        shutil.rmtree(staging, ignore_errors=True)
         manifest = {
             "version": 0,
             "n_buckets": n_buckets,
@@ -225,7 +235,7 @@ class DurableVectorTable:
         ]
         schema = StructType.fromJson(json.loads(self.manifest["schema"]))
         if not paths:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         return self.spark.read.schema(schema).parquet(*paths)
 
     def count(self) -> int:
@@ -233,16 +243,14 @@ class DurableVectorTable:
 
     # ---------------- mutation side (copy-on-write) ----------------
 
-    def _buckets_of(self, ids: Sequence) -> dict[int, list[str]]:
+    def _buckets_of(self, ids: list[str]) -> dict[int, list[str]]:
         """Map ids -> buckets through the same Spark expression the data
         was bucketed with (structural hash parity, no Python xxhash)."""
         id_col = self.manifest["id_col"]
         n_buckets = self.manifest["n_buckets"]
-        uniq = list(dict.fromkeys(str(i) for i in ids))
+        uniq = list(dict.fromkeys(ids))
         rows = (
-            self.spark.createDataFrame(
-                [(i,) for i in uniq], f"{id_col} string"
-            )
+            local_frame(self.spark, [(i,) for i in uniq], id_schema(id_col))
             .select(F.col(id_col), _bucket_expr(id_col, n_buckets).alias("__b"))
             .collect()
         )
@@ -277,13 +285,14 @@ class DurableVectorTable:
         updated.  Replaces the per-bucket loop that dispatched ~3 Spark
         jobs per touched bucket — profiled at 8-9 s per durable_cdc wave
         for ~170 rows: the wall was driver job fan-out, not byte IO.
-        Semantics identical to ``_rewrite_bucket`` per bucket: unique
-        per-attempt dirs, losers orphan cleanly, the manifest CAS is
-        still the only commit point."""
+        Each generation dir carries a per-attempt token (recorded in the
+        manifest), so two mutations racing from one snapshot write
+        disjoint dirs, a loser's dirs are clean orphans that no retry can
+        collide with, and the manifest CAS is the only commit point."""
         stage = os.path.join(
             self.path, "data", f"_stage-{uuid.uuid4().hex[:8]}"
         )
-        merged.write.partitionBy("__b").parquet(stage)
+        parquet_writer(merged).partitionBy("__b").parquet(stage)
         try:
             for k, n_rows in rows_after.items():
                 gen = buckets[str(k)]["gen"] + 1
@@ -301,29 +310,16 @@ class DurableVectorTable:
         finally:
             shutil.rmtree(stage, ignore_errors=True)
 
-    def _rewrite_bucket(self, k: int, new_df: DataFrame, n_rows: int, buckets: dict):
-        # per-attempt unique dir (recorded in the manifest): two mutations
-        # racing from the same snapshot write DISJOINT dirs and contend
-        # only on the manifest CAS — and a loser's orphan dir can never
-        # collide with a retry's target (the deterministic gen=N naming
-        # livelocked: the loser's own leftover made every retry fail)
-        gen = buckets[str(k)]["gen"] + 1
-        dirname = f"gen={gen}-{uuid.uuid4().hex[:8]}"
-        if n_rows > 0:
-            new_df.write.parquet(
-                os.path.join(self.path, "data", f"bucket={k}", dirname)
-            )
-            buckets[str(k)] = {"gen": gen, "rows": n_rows, "dir": dirname}
-        else:
-            buckets[str(k)] = {"gen": gen, "rows": 0, "dir": None}
-
-    def delete_embeddings_batch(self, unique_ids: Sequence) -> "DurableVectorTable":
+    def delete_embeddings_batch(self, unique_ids) -> "DurableVectorTable":
         """Durable batch delete: rewrites only the buckets holding the ids
         (reference sharded_vector_database.py:134-154's per-shard rewrite).
-        Every id must exist — the reference's strict contract."""
+        The contract of ``VectorTable.delete_embeddings_batch``: a scalar
+        id is wrapped, None or empty raises ValueError; every id must
+        exist (KeyError otherwise)."""
+        ids = delete_ids(unique_ids)
         id_col = self.manifest["id_col"]
         next_version = self._check_uncommitted()
-        by_bucket = self._buckets_of(unique_ids)
+        by_bucket = self._buckets_of(ids)
         new_manifest = json.loads(json.dumps(self.manifest))
         buckets = new_manifest["buckets"]
         for k, ids in by_bucket.items():
@@ -517,27 +513,34 @@ class DurableVectorTable:
     # ---------------- maintenance ----------------
 
     def compact(self, target_files_per_bucket: int = 1) -> "DurableVectorTable":
-        """Rewrite buckets whose live generation has fragmented into more
-        than ``target_files_per_bucket`` parquet files (repeated small
-        upserts) into one coalesced next generation.  Contents unchanged —
-        a new version is published so readers swap atomically; the small
-        files remain until ``vacuum``."""
+        """Rewrite every bucket whose live generation has fragmented into
+        more than ``target_files_per_bucket`` parquet files (repeated small
+        upserts) as a one-file next generation, all in one write job
+        repartitioned by bucket.  Contents unchanged — a new version is
+        published so readers swap atomically; the small files remain until
+        ``vacuum``."""
         next_version = self._check_uncommitted()
         new_manifest = json.loads(json.dumps(self.manifest))
         buckets = new_manifest["buckets"]
-        changed = False
+        fragmented: dict[int, int] = {}
         for k in range(self.manifest["n_buckets"]):
-            if buckets[str(k)]["rows"] == 0:
+            n_rows = buckets[str(k)]["rows"]
+            if n_rows == 0:
                 continue
             bp = self._bucket_path(k)
             n_files = sum(1 for f in os.listdir(bp) if f.endswith(".parquet"))
-            if n_files <= target_files_per_bucket:
-                continue
-            cur = self.spark.read.parquet(bp).coalesce(target_files_per_bucket)
-            self._rewrite_bucket(k, cur, buckets[str(k)]["rows"], buckets)
-            changed = True
-        if not changed:
+            if n_files > target_files_per_bucket:
+                fragmented[k] = n_rows
+        if not fragmented:
             return self
+        merged = (
+            self.spark.read.parquet(*[self._bucket_path(k) for k in fragmented])
+            .withColumn(
+                "__b", _bucket_expr(self.manifest["id_col"], self.manifest["n_buckets"])
+            )
+            .repartition("__b")
+        )
+        self._rewrite_buckets_one_pass(merged, fragmented, buckets)
         new_manifest["version"] = next_version
         _publish(self.path, new_manifest)
         return DurableVectorTable(self.spark, self.path, new_manifest)
@@ -557,7 +560,6 @@ class DurableVectorTable:
         without the grace window a concurrent vacuum would delete data a
         writer is about to commit (Delta's retention-period rule; pass 0
         only when no writer can be live)."""
-        import shutil
         import time as _time
 
         mdir = os.path.join(self.path, _MANIFEST_DIR)
@@ -647,9 +649,3 @@ def _publish(path: str, manifest: dict) -> None:
     with open(tmp, "w") as f:
         f.write(str(version))
     os.replace(tmp, latest)
-
-
-def _cleanup_staging(staging: str) -> None:
-    import shutil
-
-    shutil.rmtree(staging, ignore_errors=True)

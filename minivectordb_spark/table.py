@@ -26,6 +26,17 @@ faiss.normalize_L2 (quirk §2.1: we never mutate the stored vector).
 Persistence is Parquet (pickle -> columnar files); ``max_records_per_file``
 is the shard_size analogue (sharded_vector_database.py:9).
 
+Cost of a mutation: the batch (and every other driver-side frame: id
+lists, query lists, the empty table) is built once through Arrow
+(``local_frame``) and plans as a ``LocalTableScan``, so each later
+evaluation of it reads driver memory instead of re-running a Python RDD;
+an insert into ``VectorTable.empty()`` runs no Spark job at all.  On a
+durable table (``save_durable``) a mutation then rewrites only the buckets
+it touches (durable.py).  Parquet writes of float-array columns skip the
+dictionary attempt
+(``parquet_writer``): embeddings are high-cardinality, so parquet builds a
+dictionary only to discard it, and the files come out byte-identical.
+
 At 100 TB the same surface holds: uniqueness prechecks are one broadcast-or
 shuffle join per *batch* (never per row), deletes rewrite only matched files
 under Delta, and the snapshot model gives readers consistency without the
@@ -39,13 +50,17 @@ import json
 import math
 from typing import Any, Iterable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
+    DataType,
     DoubleType,
     FloatType,
+    IntegerType,
     MapType,
     StringType,
     StructField,
@@ -71,6 +86,88 @@ VECTOR_SCHEMA = StructType(
         StructField("meta_json", StringType(), nullable=True),
     ]
 )
+_QUERY_SCHEMA = StructType(
+    [
+        StructField("query_id", IntegerType()),
+        StructField("query_embedding", ArrayType(FloatType())),
+    ]
+)
+
+
+def id_schema(id_col: str = "id") -> StructType:
+    return StructType([StructField(id_col, StringType())])
+
+
+def delete_ids(unique_ids) -> list[str]:
+    """The ids of a batch delete, under the sharded class's contract
+    (sharded_vector_database.py:206-217): a scalar is one id (a string is
+    never iterated into characters), None or empty raises."""
+    if unique_ids is None:
+        raise ValueError("No unique ids provided.")
+    if not isinstance(unique_ids, (list, tuple, set)):
+        unique_ids = [unique_ids]
+    if not unique_ids:
+        raise ValueError("No unique ids provided.")
+    return [str(u) for u in unique_ids]
+
+
+def _has_timestamp(dt: DataType) -> bool:
+    if isinstance(dt, TimestampType):
+        return True
+    if isinstance(dt, ArrayType):
+        return _has_timestamp(dt.elementType)
+    if isinstance(dt, MapType):
+        return _has_timestamp(dt.valueType)
+    return False
+
+
+def _timestamps_to_micros(v, dt: DataType):
+    """Python value -> Arrow-ready value with every timestamp as UTC epoch
+    microseconds, converted by Spark's own ``TimestampType.toInternal`` —
+    the list path's meaning: a naive datetime is the DRIVER's local time,
+    an aware one its instant (Arrow alone would read naive as UTC)."""
+    if v is None:
+        return None
+    if isinstance(dt, TimestampType):
+        return dt.toInternal(v)
+    if isinstance(dt, ArrayType):
+        return [_timestamps_to_micros(x, dt.elementType) for x in v]
+    if isinstance(dt, MapType):
+        return [(k, _timestamps_to_micros(x, dt.valueType)) for k, x in v.items()]
+    return v
+
+
+def local_frame(spark: SparkSession, rows: Sequence[tuple], schema: StructType) -> DataFrame:
+    """Driver-side rows -> DataFrame through one Arrow table: how this
+    module and ``durable`` turn Python values into a frame.  It plans as a
+    ``LocalTableScan`` (re-evaluating it reads driver memory, no Python
+    worker), needs no pandas and is independent of
+    ``spark.sql.execution.arrow.pyspark.enabled``.  ``rows`` are tuples in
+    ``schema`` order, as ``spark.createDataFrame(rows, schema)`` takes
+    them, and come back as the same rows."""
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [() for _ in schema.fields]
+    arrays = []
+    for field, arrow_field, col in zip(schema.fields, arrow_schema, columns):
+        if _has_timestamp(field.dataType):
+            col = [_timestamps_to_micros(v, field.dataType) for v in col]
+        arrays.append(pa.array(col, type=arrow_field.type))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow_schema), schema)
+
+
+def parquet_writer(df: DataFrame) -> DataFrameWriter:
+    """``df.write`` with parquet's dictionary turned off for every float-
+    and double-array column (``<col>.list.element``), and only for those:
+    an embedding's values are nearly all distinct, so the dictionary parquet
+    builds is discarded and the file is byte-identical without it.  String
+    columns keep their dictionary."""
+    writer = df.write
+    for f in df.schema.fields:
+        if isinstance(f.dataType, ArrayType) and isinstance(
+            f.dataType.elementType, (FloatType, DoubleType)
+        ):
+            writer = writer.option(f"parquet.enable.dictionary#{f.name}.list.element", "false")
+    return writer
 
 
 def _split_metadata(md: dict | None):
@@ -104,6 +201,17 @@ def _split_metadata(md: dict | None):
     return s, n, t, b, a, json.dumps(md, default=str, sort_keys=True)
 
 
+def _record_rows(ids: Sequence[str], vecs: Sequence[list], metadata_dicts: Sequence) -> list[tuple]:
+    """Validated batch -> VECTOR_SCHEMA row tuples (raw vector, unit
+    vector, norm, typed metadata maps)."""
+    rows = []
+    for uid, vec, md in zip(ids, vecs, metadata_dicts):
+        n = math.sqrt(sum(x * x for x in vec))
+        normed = [x / n for x in vec] if n > 0 else list(vec)
+        rows.append((uid, vec, normed, n, *_split_metadata(md)))
+    return rows
+
+
 def _reassemble_metadata(row) -> dict:
     """Typed maps -> plain dict for the reference-parity return shape."""
     out: dict = {}
@@ -130,12 +238,15 @@ class VectorTable:
         self.spark = spark
         self.df = df
         self.dim = dim
+        self._known_empty = False
 
     # ---------------- construction / persistence ----------------
 
     @classmethod
     def empty(cls, spark: SparkSession) -> "VectorTable":
-        return cls(spark, spark.createDataFrame([], VECTOR_SCHEMA), dim=None)
+        t = cls(spark, local_frame(spark, [], VECTOR_SCHEMA), dim=None)
+        t._known_empty = True  # a write need not run a job to learn it
+        return t
 
     @classmethod
     def from_dataframe(
@@ -266,7 +377,7 @@ class VectorTable:
         if cluster_by:
             exprs = [F.expr(c) for c in cluster_by]
             df = df.repartition(*exprs).sortWithinPartitions(*exprs)
-        writer = df.write.mode("overwrite")
+        writer = parquet_writer(df).mode("overwrite")
         if max_records_per_file:
             writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
         writer.parquet(path)
@@ -327,24 +438,20 @@ class VectorTable:
                 raise ValueError(f"Embedding dimension mismatch: expected {dim}, got {len(v)}")
 
         # uniqueness vs the existing table: one broadcast semi-join per batch
-        if self.df is not None and not self._is_empty():
+        if not self._is_empty():
             clash = (
                 self.df.select("id")
-                .join(F.broadcast(self.spark.createDataFrame([(i,) for i in ids], ["id"])), "id", "left_semi")
+                .join(F.broadcast(local_frame(self.spark, [(i,) for i in ids], id_schema())), "id", "left_semi")
                 .limit(1)
                 .count()
             )
             if clash:
                 raise ValueError("Unique ID already exists.")
 
-        rows = []
-        for uid, vec, md in zip(ids, vecs, metadata_dicts):
-            n = math.sqrt(sum(x * x for x in vec))
-            normed = [x / n for x in vec] if n > 0 else list(vec)
-            s, num, ts, b, arr, js = _split_metadata(md)
-            rows.append((uid, vec, normed, n, s, num, ts, b, arr, js))
-        new_df = self.spark.createDataFrame(rows, VECTOR_SCHEMA)
-        return VectorTable(self.spark, self.df.unionByName(new_df), dim=dim)
+        new_df = local_frame(self.spark, _record_rows(ids, vecs, metadata_dicts), VECTOR_SCHEMA)
+        if not self._known_empty:
+            new_df = self.df.unionByName(new_df)
+        return VectorTable(self.spark, new_df, dim=dim)
 
     def delete_embedding(self, unique_id) -> "VectorTable":
         """Single delete (vector_database.py:119-155) — an anti-join; no row
@@ -355,14 +462,8 @@ class VectorTable:
         """Batch delete with the sharded class's strict contract
         (sharded_vector_database.py:206-241): scalar input wrapped, None or
         empty raises, ANY missing id raises."""
-        if unique_ids is None:
-            raise ValueError("No unique ids provided.")
-        if not isinstance(unique_ids, (list, tuple, set)):
-            unique_ids = [unique_ids]
-        ids = [str(u) for u in unique_ids]
-        if not ids:
-            raise ValueError("No unique ids provided.")
-        ids_df = F.broadcast(self.spark.createDataFrame([(i,) for i in ids], ["id"]))
+        ids = delete_ids(unique_ids)
+        ids_df = F.broadcast(local_frame(self.spark, [(i,) for i in ids], id_schema()))
         found = self.df.join(ids_df, "id", "left_semi").select("id").distinct().count()
         if found != len(set(ids)):
             raise ValueError("Unique ID does not exist.")
@@ -448,9 +549,10 @@ class VectorTable:
         if self._is_empty():
             return [([], [], []) for _ in embeddings]
         pred = compile_filters(metadata_filter, exclude_filter, or_filters, TypedMapResolver())
-        queries_df = self.spark.createDataFrame(
+        queries_df = local_frame(
+            self.spark,
             [(i, [float(x) for x in e]) for i, e in enumerate(embeddings)],
-            "query_id int, query_embedding array<float>",
+            _QUERY_SCHEMA,
         )
         out = knn_batch(
             queries_df,
@@ -504,4 +606,4 @@ class VectorTable:
     # ---------------- internals ----------------
 
     def _is_empty(self) -> bool:
-        return self.df.limit(1).count() == 0
+        return self._known_empty or self.df.limit(1).count() == 0

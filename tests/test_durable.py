@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from minivectordb_spark.durable import DurableVectorTable
-from minivectordb_spark.table import VectorTable
+from minivectordb_spark.table import VectorTable, local_frame
 
 
 @pytest.fixture()
@@ -69,6 +69,33 @@ def test_delete_missing_id_raises(spark, base_df, tmp_path):
     t = DurableVectorTable.create(base_df, str(tmp_path / "cow"), id_col="id")
     with pytest.raises(KeyError, match="999"):
         t.delete_embeddings_batch(["999"])
+
+
+def test_delete_scalar_id_is_one_id(spark, base_df, tmp_path):
+    """A scalar id is wrapped, as in VectorTable.delete_embeddings_batch:
+    "17" deletes id 17, not ids "1" and "7"."""
+    t = DurableVectorTable.create(base_df, str(tmp_path / "cow"), id_col="id", n_buckets=4)
+    ids = {r["id"] for r in t.delete_embeddings_batch("17").to_df().collect()}
+    assert "17" not in ids and {"1", "7"} <= ids and len(ids) == 39
+    t = DurableVectorTable.load(spark, t.path).delete_embeddings_batch(3)
+    ids = {r["id"] for r in t.to_df().collect()}
+    assert "3" not in ids and len(ids) == 38
+
+
+def test_emptied_table_reads_as_empty_frame(spark, tmp_path):
+    one = spark.createDataFrame([("a", [1.0], "x")], "id string, embedding array<double>, tag string")
+    t = DurableVectorTable.create(one, str(tmp_path / "cow"), id_col="id", n_buckets=2)
+    df = t.delete_embeddings_batch("a").to_df()
+    assert df.count() == 0
+    assert [f.name for f in df.schema.fields] == ["id", "embedding", "tag"]
+
+
+@pytest.mark.parametrize("ids", [None, [], ()], ids=["none", "empty-list", "empty-tuple"])
+def test_delete_without_ids_raises_valueerror(spark, base_df, tmp_path, ids):
+    t = DurableVectorTable.create(base_df, str(tmp_path / "cow"), id_col="id", n_buckets=4)
+    with pytest.raises(ValueError, match="No unique ids provided"):
+        t.delete_embeddings_batch(ids)
+    assert DurableVectorTable.load(spark, t.path).manifest["version"] == 0
 
 
 def test_delete_into_empty_bucket_raises_keyerror(spark, tmp_path):
@@ -259,6 +286,58 @@ def test_compact_and_vacuum(spark, base_df, tmp_path):
     assert {r["id"] for r in DurableVectorTable.load(spark, root).to_df().collect()} == before
     with pytest.raises(FileNotFoundError):
         DurableVectorTable.load(spark, root, version=0)
+
+
+def _encodings(root):
+    """Column path -> every parquet encoding it uses, over all data files
+    under ``root``."""
+    import pyarrow.parquet as pq
+
+    out: dict[str, set] = {}
+    for dirpath, _, files in os.walk(root):
+        for f in files:
+            if not f.endswith(".parquet"):
+                continue
+            md = pq.ParquetFile(os.path.join(dirpath, f)).metadata
+            for g in range(md.num_row_groups):
+                for c in range(md.num_columns):
+                    col = md.row_group(g).column(c)
+                    out.setdefault(col.path_in_schema, set()).update(col.encodings)
+    return out
+
+
+def _has_dictionary(encodings) -> bool:
+    return any("DICTIONARY" in e for e in encodings)
+
+
+def test_float_arrays_written_without_dictionary(spark, tmp_path):
+    """Every write (create, bucket rewrite, compact, VectorTable.save)
+    turns the dictionary off on float-array columns only.  The arrays here
+    take 3 distinct values, so parquet WOULD keep a dictionary for them;
+    the string columns keep theirs."""
+    low = spark.createDataFrame(
+        [(str(i), [float(i % 3), 1.0], f"m{i % 2}") for i in range(60)],
+        "id string, embedding array<double>, tag string",
+    )
+    root = str(tmp_path / "cow")
+    t = DurableVectorTable.create(low, root, id_col="id", n_buckets=2)
+    t = t.store_embeddings_batch(
+        spark.createDataFrame(
+            [("n1", [2.0, 1.0], "m0")], "id string, embedding array<double>, tag string"
+        )
+    )
+    compacted = t.compact()
+    assert compacted.manifest["version"] == t.manifest["version"] + 1
+    durable = _encodings(root)
+    assert not _has_dictionary(durable["embedding.list.element"])
+    assert _has_dictionary(durable["tag"])
+
+    saved = str(tmp_path / "saved")
+    VectorTable.from_dataframe(low, meta_cols=["tag"]).save(saved)
+    flat = _encodings(saved)
+    assert not _has_dictionary(flat["embedding.list.element"])
+    assert not _has_dictionary(flat["embedding_norm.list.element"])
+    assert _has_dictionary(flat["meta_json"])
 
 
 def test_vectortable_durable_bridge(spark, tmp_path):
@@ -506,32 +585,19 @@ def test_batch_nullability_only_difference_accepted(spark, base_df, tmp_path):
         DurableVectorTable.load(spark, root).store_embeddings_batch(wrong)
 
 
-def _count_jobs(spark, group: str, fn):
-    """Run fn() under a named job group and count its Spark jobs via the
-    PUBLIC StatusTracker API (ADVICE r10: the old version reached into
-    the private AppStatusStore through py4j).  AQE sub-jobs inherit the
-    thread's job-group local property, so they are counted too — which
-    is why the caller asserts a RATIO vs bucket count, not a hardcoded
-    absolute that drifts across Spark/AQE versions."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        result = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return result, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_mutations_run_constant_jobs_not_per_bucket(spark, tmp_path):
+def test_mutations_run_constant_jobs_not_per_bucket(spark, tmp_path, count_jobs):
     """VERDICT r9 item 5 regression lock: upsert/store batches touching
     EVERY bucket must dispatch a near-CONSTANT number of Spark jobs (one
-    stats agg + one clash/matched join + one partitioned write, ~13
-    measured with AQE sub-jobs), never ~3 jobs PER touched bucket (16
-    buckets -> >=48) — the r9 shape whose driver fan-out masqueraded as
-    an 8-9 s 'commit IO' wall in the durable_cdc waves.  The bound is a
-    ratio vs bucket count (< 2 jobs/bucket) so AQE/version variance in
-    sub-job counts cannot false-fail it while the >=3-per-bucket
-    regression still trips it."""
+    stats agg + one clash/matched join + one partitioned write: 9 for the
+    upsert, 8 for the insert, 3 for the delete and 3 for the compaction,
+    measured with AQE sub-jobs on driver-local batches as
+    ``VectorTable.store_embeddings_batch`` builds them), never ~3 jobs PER
+    touched bucket (16 buckets -> >=48) — the r9 shape whose driver
+    fan-out masqueraded as an 8-9 s 'commit IO' wall in the durable_cdc
+    waves; compact() of every fragmented bucket is held to the same
+    bound.  The bound is a ratio vs bucket count (< 2 jobs/bucket) so
+    AQE/version variance in sub-job counts cannot false-fail it while the
+    >=3-per-bucket regression still trips it."""
     n_buckets = 16
     wide = spark.createDataFrame(
         [(str(i), [float(i), 1.0], f"m{i}") for i in range(64)],
@@ -541,31 +607,37 @@ def test_mutations_run_constant_jobs_not_per_bucket(spark, tmp_path):
     t = DurableVectorTable.create(wide, root, id_col="id", n_buckets=n_buckets)
     bound = 2 * n_buckets  # per-bucket fan-out is >= 3 per bucket
 
-    up = spark.createDataFrame(
+    schema = wide.schema
+    up = local_frame(
+        spark,
         [(str(i), [9.0, 9.0], "up") for i in range(64)]
         + [(str(1000 + i), [7.0, 7.0], "new") for i in range(16)],
-        "id string, embedding array<double>, tag string",
+        schema,
     )
-    t2, upsert_jobs = _count_jobs(
-        spark, "durable-upsert", lambda: t.upsert_embeddings_batch(up)
+    t2, upsert_jobs = count_jobs(
+        "durable-upsert", lambda: t.upsert_embeddings_batch(up)
     )
     assert upsert_jobs < bound, f"upsert dispatched {upsert_jobs} jobs"
     assert t2.count() == 80
 
-    ins = spark.createDataFrame(
-        [(str(2000 + i), [3.0, 3.0], "ins") for i in range(64)],
-        "id string, embedding array<double>, tag string",
+    ins = local_frame(
+        spark, [(str(2000 + i), [3.0, 3.0], "ins") for i in range(64)], schema
     )
-    t3, insert_jobs = _count_jobs(
-        spark, "durable-insert", lambda: t2.store_embeddings_batch(ins)
+    t3, insert_jobs = count_jobs(
+        "durable-insert", lambda: t2.store_embeddings_batch(ins)
     )
     assert insert_jobs < bound, f"insert dispatched {insert_jobs} jobs"
     assert t3.count() == 144
 
-    t4, delete_jobs = _count_jobs(
-        spark,
+    t4, delete_jobs = count_jobs(
         "durable-delete",
         lambda: t3.delete_embeddings_batch([str(i) for i in range(64)]),
     )
     assert delete_jobs < bound, f"delete dispatched {delete_jobs} jobs"
     assert t4.count() == 80
+
+    before = {r["id"] for r in t4.to_df().collect()}
+    t5, compact_jobs = count_jobs("durable-compact", t4.compact)
+    assert t5.manifest["version"] == t4.manifest["version"] + 1
+    assert compact_jobs < bound, f"compact dispatched {compact_jobs} jobs"
+    assert {r["id"] for r in t5.to_df().collect()} == before

@@ -2,11 +2,15 @@
 reference tests/test_vector_database.py:177-380, :505-547,
 tests/test_sharded_vector_database.py:613-693)."""
 
+import calendar
+import datetime as dt
 import math
+import time
 
 import pytest
+from pyspark.sql import functions as F
 
-from minivectordb_spark.table import VectorTable
+from minivectordb_spark.table import VECTOR_SCHEMA, VectorTable, _record_rows
 
 
 def test_store_and_count(spark):
@@ -220,3 +224,67 @@ def test_save_cluster_by_roundtrip(spark, tmp_path):
     assert t2.count() == 40
     ids, _, _ = t2.find_most_similar([1.0, 0.0], metadata_filter={"type": "t2"}, k=50)
     assert len(ids) == 10
+
+
+@pytest.fixture()
+def non_utc_driver_tz(monkeypatch):
+    """The driver process runs in a zone that is not UTC (and differs from
+    the Spark session's), so naive datetimes show which zone they are read
+    in."""
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+@pytest.mark.parametrize("arrow_enabled", ["true", "false"])
+def test_store_batch_is_local_and_matches_list_path(spark, non_utc_driver_tz, arrow_enabled):
+    """The insert batch plans as a LocalTableScan under either Arrow
+    setting and holds exactly the rows ``createDataFrame(list)`` built
+    before: every metadata kind, None metadata, naive and aware datetimes.
+    A naive datetime keeps its meaning: the driver's local time."""
+    naive = dt.datetime(2020, 1, 1, 12, 0)
+    aware = dt.datetime(2020, 1, 1, 12, 0, tzinfo=dt.timezone.utc)
+    ids = ["a", "b", "c", "d"]
+    vecs = [[1.0, 0.0, 0.5], [0.0, 0.0, 0.0], [0.1, 0.2, 0.3], [3.0, 4.0, 0.0]]
+    metas = [
+        {"s": "x", "n": 3, "f": 0.25, "b": True, "arr": [1, "q"], "t": naive,
+         "ta": aware, "d": dt.date(2021, 5, 6), "skip": None},
+        None,
+        {},
+        {"s": "y", "t": naive},
+    ]
+    prev = spark.conf.get("spark.sql.execution.arrow.pyspark.enabled")
+    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", arrow_enabled)
+    try:
+        t = VectorTable.empty(spark).store_embeddings_batch(ids, vecs, metas)
+        plan = t.df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+        list_df = spark.createDataFrame(
+            _record_rows(ids, vecs, metas), VECTOR_SCHEMA
+        )
+        assert t.df.schema == list_df.schema
+        assert t.df.collect() == list_df.collect()
+        got = t.df.filter(F.col("id") == "a").select(
+            F.unix_seconds(F.col("meta_ts")["t"]).alias("t"),
+            F.unix_seconds(F.col("meta_ts")["ta"]).alias("ta"),
+        ).first()
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", prev)
+    # noon in New York is 17:00 UTC; the aware value is its own instant
+    assert got["t"] == calendar.timegm((2020, 1, 1, 17, 0, 0))
+    assert got["ta"] == calendar.timegm((2020, 1, 1, 12, 0, 0))
+
+
+def test_store_into_empty_table_runs_no_jobs(spark, count_jobs):
+    """Inserting into VectorTable.empty() needs no job: the empty table is
+    known empty and the batch is a driver-local relation."""
+    t, jobs = count_jobs(
+        "empty-store",
+        lambda: VectorTable.empty(spark).store_embeddings_batch(
+            ["a", "b"], [[1.0, 0.0], [0.0, 1.0]], [{"k": 1}, {"k": "v"}]
+        ),
+    )
+    assert jobs == 0
+    assert t.count() == 2 and t.dim == 2
