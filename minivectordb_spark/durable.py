@@ -37,10 +37,12 @@ Cost of a mutation: the batch's ids and rows are driver-local frames
 (``table.local_frame``), so the stats, the probe and the write each read
 them from driver memory; the touched buckets are scanned once and
 rewritten in one partitioned write job; and float-array columns are
-written without a parquet dictionary (``table.parquet_writer``) — the
-dictionary would be discarded, so the files are byte-identical without
-the pass.  ``compact`` rewrites every fragmented bucket in that same one
-job.
+written without a parquet dictionary (``table.parquet_writer``).  For
+high-cardinality embeddings parquet would discard that dictionary, so the
+files are byte-identical without the pass; low-cardinality float arrays
+(quantized, binary, one-hot) lose a dictionary parquet would have kept
+and are written larger.  ``compact`` rewrites every fragmented bucket in
+that same one job.
 
 Scale: a delete of D ids costs O(sum of affected bucket sizes), not a
 table rewrite; with N buckets and uniform ids that is ~(D/N)·table per
@@ -322,17 +324,17 @@ class DurableVectorTable:
         by_bucket = self._buckets_of(ids)
         new_manifest = json.loads(json.dumps(self.manifest))
         buckets = new_manifest["buckets"]
-        for k, ids in by_bucket.items():
+        for k, bucket_ids in by_bucket.items():
             if buckets[str(k)]["rows"] == 0:
                 # empty bucket has no generation dir to read — the ids are
                 # simply absent (strict contract, same as a miss below)
-                raise KeyError(f"Embedding ids not found: {ids}")
+                raise KeyError(f"Embedding ids not found: {bucket_ids}")
         # ONE pass over every touched bucket (the upsert/store r10
         # discipline): one multi-path scan, one presence probe (ids are a
         # driver-provided list — the probe result is |ids| rows, bounded
         # by the caller's own argument), one partitioned write.  The old
         # loop dispatched a collect + a write per bucket.
-        all_ids = [str(i) for ids in by_bucket.values() for i in ids]
+        all_ids = [i for bucket_ids in by_bucket.values() for i in bucket_ids]
         cur_all = self.spark.read.parquet(
             *[self._bucket_path(k) for k in by_bucket]
         ).withColumn("__b", _bucket_expr(id_col, self.manifest["n_buckets"]))
@@ -347,8 +349,8 @@ class DurableVectorTable:
             raise KeyError(f"Embedding ids not found: {missing}")
         kept = cur_all.filter(~F.col(id_col).cast("string").isin(all_ids))
         rows_after = {
-            k: buckets[str(k)]["rows"] - len(ids)
-            for k, ids in by_bucket.items()
+            k: buckets[str(k)]["rows"] - len(bucket_ids)
+            for k, bucket_ids in by_bucket.items()
         }
         self._rewrite_buckets_one_pass(kept, rows_after, buckets)
         new_manifest["version"] = next_version

@@ -33,9 +33,11 @@ evaluation of it reads driver memory instead of re-running a Python RDD;
 an insert into ``VectorTable.empty()`` runs no Spark job at all.  On a
 durable table (``save_durable``) a mutation then rewrites only the buckets
 it touches (durable.py).  Parquet writes of float-array columns skip the
-dictionary attempt
-(``parquet_writer``): embeddings are high-cardinality, so parquet builds a
-dictionary only to discard it, and the files come out byte-identical.
+dictionary attempt (``parquet_writer``).  For high-cardinality values (real
+embeddings) parquet builds a dictionary only to discard it, so the files
+come out byte-identical; for low-cardinality ones (quantized, binary or
+one-hot vectors stored as floats) parquet would have kept the dictionary,
+and the files are written plain and come out larger.
 
 At 100 TB the same surface holds: uniqueness prechecks are one broadcast-or
 shuffle join per *batch* (never per row), deletes rewrite only matched files
@@ -157,10 +159,12 @@ def local_frame(spark: SparkSession, rows: Sequence[tuple], schema: StructType) 
 
 def parquet_writer(df: DataFrame) -> DataFrameWriter:
     """``df.write`` with parquet's dictionary turned off for every float-
-    and double-array column (``<col>.list.element``), and only for those:
-    an embedding's values are nearly all distinct, so the dictionary parquet
-    builds is discarded and the file is byte-identical without it.  String
-    columns keep their dictionary."""
+    and double-array column (``<col>.list.element``), and only for those.
+    When the values are high-cardinality (real embeddings), parquet builds
+    the dictionary and then discards it, so the file is byte-identical
+    without the pass.  When they are low-cardinality (quantized, binary or
+    one-hot vectors), parquet would have kept it, and the plain-encoded
+    file is larger.  String columns keep their dictionary."""
     writer = df.write
     for f in df.schema.fields:
         if isinstance(f.dataType, ArrayType) and isinstance(
@@ -449,9 +453,7 @@ class VectorTable:
                 raise ValueError("Unique ID already exists.")
 
         new_df = local_frame(self.spark, _record_rows(ids, vecs, metadata_dicts), VECTOR_SCHEMA)
-        if not self._known_empty:
-            new_df = self.df.unionByName(new_df)
-        return VectorTable(self.spark, new_df, dim=dim)
+        return VectorTable(self.spark, self.df.unionByName(new_df), dim=dim)
 
     def delete_embedding(self, unique_id) -> "VectorTable":
         """Single delete (vector_database.py:119-155) — an anti-join; no row
