@@ -39,6 +39,19 @@ come out byte-identical; for low-cardinality ones (quantized, binary or
 one-hot vectors stored as floats) parquet would have kept the dictionary,
 and the files are written plain and come out larger.
 
+Cost of a search: ``find_most_similar`` runs one Spark job, a filtered
+scan into a top-k, and ``find_most_similar_batch`` runs only the jobs of
+its own plan (4 over a small loaded table).  The scan reads ``id``, the
+scored vector (``embedding_norm`` for a search, the raw ``embedding`` for
+a batch) and the five typed metadata maps, the columns the answer is
+built from; the other vector, ``norm`` and ``meta_json`` are never
+decoded.
+There is no emptiness probe: a top-k over no rows already returns none,
+which is the reference's empty answer (vector_database.py:470-471).  Only
+``VectorTable.empty()`` is known empty without a job, and only a filter
+that fails to compile costs one ``isEmpty()`` job, to keep the
+reference's order (an empty table answers before its filter is parsed).
+
 At 100 TB the same surface holds: uniqueness prechecks are one broadcast-or
 shuffle join per *batch* (never per row), deletes rewrite only matched files
 under Delta, and the snapshot model gives readers consistency without the
@@ -53,7 +66,7 @@ import math
 from typing import Any, Iterable, Sequence
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
+from pyspark.sql import Column, DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
@@ -72,7 +85,7 @@ from pyspark.sql.types import (
 
 from minivectordb_spark.autocut import apply_autocut, autocut_distances
 from minivectordb_spark.filters import TypedMapResolver, compile_filters
-from minivectordb_spark.scoring import cosine_sim, knn
+from minivectordb_spark.scoring import knn, knn_batch
 
 VECTOR_SCHEMA = StructType(
     [
@@ -216,6 +229,10 @@ def _record_rows(ids: Sequence[str], vecs: Sequence[list], metadata_dicts: Seque
     return rows
 
 
+# the typed maps an answer's metadata is rebuilt from
+_META_COLS = ("meta_str", "meta_num", "meta_ts", "meta_bool", "meta_arr")
+
+
 def _reassemble_metadata(row) -> dict:
     """Typed maps -> plain dict for the reference-parity return shape."""
     out: dict = {}
@@ -249,7 +266,7 @@ class VectorTable:
     @classmethod
     def empty(cls, spark: SparkSession) -> "VectorTable":
         t = cls(spark, local_frame(spark, [], VECTOR_SCHEMA), dim=None)
-        t._known_empty = True  # a write need not run a job to learn it
+        t._known_empty = True  # a read or write need not run a job to learn it
         return t
 
     @classmethod
@@ -442,7 +459,8 @@ class VectorTable:
                 raise ValueError(f"Embedding dimension mismatch: expected {dim}, got {len(v)}")
 
         # uniqueness vs the existing table: one broadcast semi-join per batch
-        if not self._is_empty():
+        # (over an empty table it finds no clash, so it needs no probe first)
+        if not self._known_empty:
             clash = (
                 self.df.select("id")
                 .join(F.broadcast(local_frame(self.spark, [(i,) for i in ids], id_schema())), "id", "left_semi")
@@ -502,18 +520,17 @@ class VectorTable:
         form, SURVEY.md §2.3 op 20); ``distances=True`` returns 1 - sim
         ascending instead (the usearch variant's contract,
         sharded_vector_database_usearch.py:629-637) with the sign-flipped
-        autocut (autocut_distances)."""
-        if self._is_empty():
+        autocut (autocut_distances).
+
+        One Spark job: a scan of ``id``, ``embedding_norm`` and the typed
+        metadata maps into a top-k.  An empty table answers ``([], [], [])``
+        from that same job (``VectorTable.empty()`` from none), with no
+        emptiness probe before it; a filter that does not compile raises
+        ``ValueError`` only on a table with rows."""
+        pred = self._predicate(metadata_filter, exclude_filter, or_filters)
+        if pred is None:
             return [], [], []
-        pred = compile_filters(metadata_filter, exclude_filter, or_filters, TypedMapResolver())
-        # score the stored unit vectors (embedding_norm) — the write-once
-        # normalization means search does one dot per row, no norm fold
-        # (the immutable analogue of FAISS's normalized IndexFlatIP)
-        result = knn(
-            self.df, embedding, k=k, emb_col="embedding_norm", id_col="id",
-            pred=pred, prenormalized=True,
-        )
-        rows = result.collect()
+        rows = self._search_df(embedding, pred, k).collect()
         if not rows:
             return [], [], []
         ids = [r["id"] for r in rows]
@@ -542,27 +559,20 @@ class VectorTable:
         k: int = 5,
     ) -> list[tuple[list, list, list]]:
         """Multi-query search — the natural Spark extension (SURVEY.md §2.7):
-        all queries run in ONE job (broadcast queries x corpus + two-stage
+        all queries run in ONE plan (broadcast queries x corpus + two-stage
         per-query top-k) instead of a Python loop of single searches.
         Returns one (ids, scores, metadatas) triple per query, in input
-        order."""
-        from minivectordb_spark.scoring import knn_batch
+        order.
 
-        if self._is_empty():
+        Its jobs are the plan's own stages, with no emptiness probe before
+        them; the scan reads ``id``, the raw ``embedding`` (``knn_batch``
+        scores it) and the typed metadata maps, and only those columns
+        travel through the top-k windows.  Empty tables and malformed
+        filters answer as in ``find_most_similar``."""
+        pred = self._predicate(metadata_filter, exclude_filter, or_filters)
+        if pred is None:
             return [([], [], []) for _ in embeddings]
-        pred = compile_filters(metadata_filter, exclude_filter, or_filters, TypedMapResolver())
-        queries_df = local_frame(
-            self.spark,
-            [(i, [float(x) for x in e]) for i, e in enumerate(embeddings)],
-            _QUERY_SCHEMA,
-        )
-        out = knn_batch(
-            queries_df,
-            self.df.filter(pred),
-            k=k,
-            corpus_id_col="id",
-            corpus_emb_col="embedding",
-        ).collect()
+        out = self._batch_df(embeddings, pred, k).collect()
         by_q: dict[int, list] = {}
         for r in out:
             by_q.setdefault(r["query_id"], []).append(r)
@@ -607,5 +617,36 @@ class VectorTable:
 
     # ---------------- internals ----------------
 
-    def _is_empty(self) -> bool:
-        return self._known_empty or self.df.limit(1).count() == 0
+    def _predicate(self, metadata_filter, exclude_filter, or_filters) -> Column | None:
+        """The compiled filters, or None when the answer is empty without a
+        search: the table is ``VectorTable.empty()``, or it is empty and the
+        filters do not compile.  The reference answers an empty table before
+        it parses its filters (vector_database.py:470-471), so that is the
+        one case where emptiness is worth a job."""
+        if self._known_empty:
+            return None
+        try:
+            return compile_filters(metadata_filter, exclude_filter, or_filters, TypedMapResolver())
+        except Exception:
+            if self.df.isEmpty():
+                return None
+            raise
+
+    def _search_df(self, embedding, pred: Column, k: int) -> DataFrame:
+        """``find_most_similar``'s top-k frame.  It scores the stored unit
+        vectors (embedding_norm): the write-once normalization means one dot
+        per row, no norm fold (the immutable analogue of FAISS's normalized
+        IndexFlatIP)."""
+        rows = self.df.filter(pred).select("id", "embedding_norm", *_META_COLS)
+        return knn(rows, embedding, k=k, emb_col="embedding_norm", id_col="id", prenormalized=True)
+
+    def _batch_df(self, embeddings: Sequence, pred: Column, k: int) -> DataFrame:
+        """``find_most_similar_batch``'s top-k frame, one query per
+        ``query_id`` (the input position)."""
+        queries_df = local_frame(
+            self.spark,
+            [(i, [float(x) for x in e]) for i, e in enumerate(embeddings)],
+            _QUERY_SCHEMA,
+        )
+        rows = self.df.filter(pred).select("id", "embedding", *_META_COLS)
+        return knn_batch(queries_df, rows, k=k, corpus_id_col="id", corpus_emb_col="embedding")

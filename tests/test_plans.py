@@ -611,3 +611,37 @@ def test_budget_samplers_one_stratum_shuffle_no_join(spark, sf):
         assert "Join" not in plan, name
         assert plan.count("Exchange hashpartitioning") == 1, name
         assert "Window" in plan, name
+
+
+def _read_schemas(spark, build) -> list[set[str]]:
+    """Top-level field names of each file scan's ReadSchema in the plan of
+    ``build()``, with the plan's metadata printed in full."""
+    import re
+
+    key = "spark.sql.maxMetadataStringLength"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "100000")
+    try:
+        plan = physical_plan(build())
+    finally:
+        spark.conf.set(key, prev)
+    return [set(re.findall(r"[<,](\w+):", s)) for s in re.findall(r"ReadSchema: (struct<\S*)", plan)]
+
+
+def test_search_scans_only_answer_columns(spark, tmp_path):
+    """A search reads id, the vector it scores and the typed metadata maps:
+    the raw ``embedding`` (``embedding_norm`` for a batch), ``norm`` and
+    ``meta_json`` are pruned from the parquet scan."""
+    from minivectordb_spark.table import VectorTable
+
+    path = str(tmp_path / "vt")
+    VectorTable.empty(spark).store_embeddings_batch(
+        ["a", "b"], [[1.0, 0.0], [0.0, 1.0]], [{"k": "x"}, {"k": "y"}]
+    ).save(path)
+    t = VectorTable.load(spark, path)
+    pred = t._predicate({"k": "x"}, None, None)
+    maps = {"meta_str", "meta_num", "meta_ts", "meta_bool", "meta_arr"}
+    assert _read_schemas(spark, lambda: t._search_df([1.0, 0.0], pred, 5)) == [
+        {"id", "embedding_norm"} | maps]
+    assert _read_schemas(spark, lambda: t._batch_df([[1.0, 0.0]], pred, 5)) == [
+        {"id", "embedding"} | maps]

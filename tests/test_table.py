@@ -288,3 +288,103 @@ def test_store_into_empty_table_runs_no_jobs(spark, count_jobs):
     )
     assert jobs == 0
     assert t.count() == 2 and t.dim == 2
+
+
+_T0 = dt.datetime(2024, 1, 1)
+_FILTER_SHAPES = {
+    "none": {},
+    "and": {"metadata_filter": {"kind": "a", "score": {"$gte": 10}}},
+    "or": {"or_filters": [{"kind": "a"}, {"kind": "b"}]},
+    "exclude": {"exclude_filter": {"kind": "a"}},
+    "in": {"metadata_filter": {"tags": {"$in": "y"}}},
+    "range": {"metadata_filter": {
+        "ts": {"$gte": _T0, "$lt": _T0 + dt.timedelta(days=30)},
+        "score": {"$gt": 5, "$lte": 30},
+    }},
+}
+_BOGUS = {"k": {"$bogus": 1}}
+
+
+@pytest.fixture(scope="module")
+def loaded_table(spark, tmp_path_factory):
+    """A table read back from parquet, so nothing about it is known
+    without a job."""
+    path = str(tmp_path_factory.mktemp("loaded") / "vt")
+    n = 40
+    VectorTable.empty(spark).store_embeddings_batch(
+        [f"r{i}" for i in range(n)],
+        [[float((i * 7 + j) % 11) - 5.0 for j in range(4)] for i in range(n)],
+        [{"kind": "abc"[i % 3], "score": i, "ts": _T0 + dt.timedelta(days=i),
+          "tags": ["x", "y"][: 1 + i % 2]} for i in range(n)],
+    ).save(path)
+    return VectorTable.load(spark, path)
+
+
+@pytest.mark.parametrize("shape", list(_FILTER_SHAPES))
+def test_search_runs_one_job(loaded_table, count_jobs, shape):
+    """A search over a loaded table is one job, the scan into its top-k,
+    under every filter shape (3 while a ``limit(1).count()`` emptiness
+    probe ran first)."""
+    (ids, _, _), jobs = count_jobs(
+        f"search-{shape}",
+        lambda: loaded_table.find_most_similar([1.0, -2.0, 0.5, 3.0], k=5, **_FILTER_SHAPES[shape]),
+    )
+    assert ids
+    assert jobs == 1
+
+
+def test_search_batch_runs_no_probe(loaded_table, count_jobs):
+    """A batch search over a loaded table runs at most 4 jobs (6 while an
+    emptiness probe ran first)."""
+    res, jobs = count_jobs(
+        "search-batch",
+        lambda: loaded_table.find_most_similar_batch(
+            [[1.0, -2.0, 0.5, 3.0], [0.0, 1.0, 0.0, 1.0]], k=5, metadata_filter={"kind": "a"}),
+    )
+    assert [len(ids) for ids, _, _ in res] == [5, 5]
+    assert jobs <= 4
+
+
+def test_store_into_loaded_table_runs_no_probe(loaded_table, count_jobs):
+    """An insert into a loaded, non-empty table runs at most 3 jobs, its
+    uniqueness semi-join (5 while an emptiness probe ran first)."""
+    t, jobs = count_jobs(
+        "store-loaded",
+        lambda: loaded_table.store_embeddings_batch(["n0", "n1"], [[1.0, 0.0, 0.0, 0.0]] * 2),
+    )
+    assert jobs <= 3
+    assert t.count() == 42
+
+
+@pytest.fixture(scope="module")
+def empty_tables(spark, tmp_path_factory):
+    """Empty tables that are not ``VectorTable.empty()``: one saved and
+    loaded, one over a durable table whose rows were all deleted."""
+    root = tmp_path_factory.mktemp("empty")
+    VectorTable.empty(spark).save(str(root / "saved"))
+    two = VectorTable.empty(spark).store_embeddings_batch(
+        ["a", "b"], [[1.0, 0.0], [0.0, 1.0]], [{"k": "x"}, {"k": "y"}])
+    emptied = two.save_durable(str(root / "durable"), n_buckets=2).delete_embeddings_batch(["a", "b"])
+    return {
+        "saved": VectorTable.load(spark, str(root / "saved")),
+        "emptied": VectorTable(spark, emptied.to_df(), dim=2),
+    }
+
+
+@pytest.mark.parametrize("flt", [None, _BOGUS], ids=["no-filter", "malformed-filter"])
+@pytest.mark.parametrize("which", ["saved", "emptied"])
+def test_empty_table_answers_before_filters(empty_tables, which, flt):
+    """An empty table answers ``([], [], [])`` from search and batch, even
+    for a filter that does not compile: the reference checks emptiness
+    before it parses filters (vector_database.py:470-471)."""
+    t = empty_tables[which]
+    assert t.find_most_similar([1.0, 0.0], metadata_filter=flt, k=5) == ([], [], [])
+    assert t.find_most_similar_batch([[1.0, 0.0], [0.0, 1.0]], metadata_filter=flt, k=5) == [
+        ([], [], []), ([], [], [])]
+
+
+def test_malformed_filter_raises_on_rows(loaded_table):
+    with pytest.raises(ValueError, match="Invalid operator"):
+        loaded_table.find_most_similar([1.0, 0.0, 0.0, 0.0], metadata_filter=_BOGUS)
+    with pytest.raises(ValueError, match="Invalid operator"):
+        loaded_table.find_most_similar_batch([[1.0, 0.0, 0.0, 0.0]], metadata_filter=_BOGUS)
